@@ -51,6 +51,15 @@ Skew: with impl='sql', map-side partial aggregation absorbs hot keys by
 construction.  With impl='pandas', each partition emits at most one row per
 key, so reducer fan-in is bounded by #partitions; ``salt_buckets`` adds an
 intermediate merge level for extreme partition counts (north_rule).
+
+Reading stored sketches back (``merge_sketches``, ``estimate_grouping_sets``
+/ ``sketch_rollup`` / ``sketch_cube``, ``with_estimate``): with the jar, the
+JVM decodes the serialized bytes (java/src/hllspark/SketchCodec.java),
+merges in the raw-register domain and estimates, so rollups and estimates
+have no Python stage and ``merge_sketches`` has exactly one (the encode of
+each output group).  Without it, the numpy codec runs in pandas UDFs.  Both
+paths skip NULL sketches: an all-NULL group merges to NULL and estimates
+0.0, and ``with_estimate`` of a NULL sketch is NULL.
 """
 
 from __future__ import annotations
@@ -190,9 +199,12 @@ def _make_build_partials(keys: Sequence[str], p: int, algo: str, m_bits: int,
 # shared: merge / estimate / size UDFs
 # ---------------------------------------------------------------------------
 
-def _merge_buffers(series: pd.Series, algo: str, m_bits: int) -> bytes:
-    stack = np.stack([_sketch.decode(b) for b in series if b is not None])
-    return _sketch.encode(np.maximum.reduce(stack), algo, m_bits)
+def _merge_buffers(series: pd.Series, algo: str, m_bits: int) -> bytes | None:
+    """NULL sketches are skipped; a group with none left merges to NULL."""
+    regs = [_sketch.decode(b) for b in series if b is not None]
+    if not regs:
+        return None
+    return _sketch.encode(np.maximum.reduce(np.stack(regs)), algo, m_bits)
 
 
 def merge_udaf(algo: str = "hll", m_bits: int = 3):
@@ -208,11 +220,15 @@ def merge_udaf(algo: str = "hll", m_bits: int = 3):
 
 @F.pandas_udf(DoubleType())
 def estimate_udf(s: pd.Series) -> pd.Series:
-    """Scalar pandas UDF: serialized sketch -> distinct-count estimate."""
-    if len(s) == 0:
-        return pd.Series([], dtype="float64")
-    regs = np.stack([_sketch.decode(b) for b in s])
-    return pd.Series(_hll.estimate(regs))
+    """Scalar pandas UDF: serialized sketch -> distinct-count estimate; NULL
+    for a NULL sketch (NaN becomes NULL on the way back to Arrow)."""
+    out = np.full(len(s), np.nan)
+    present = s.notna().to_numpy()
+    if present.any():
+        out[present] = _hll.estimate(
+            np.stack([_sketch.decode(b) for b in s[present]])
+        )
+    return pd.Series(out)
 
 
 @F.pandas_udf(LongType())
@@ -247,9 +263,13 @@ def _resolve_impl(df: DataFrame, hash_mode: str, impl: str | None) -> str:
         return impl
     if hash_mode == "farmhash":
         return "pandas"
+    return "jvm" if _jvm_available(df) else "sql"
+
+
+def _jvm_available(df: DataFrame) -> bool:
     from . import jvmagg
 
-    return "jvm" if jvmagg.is_available(df.sparkSession) else "sql"
+    return jvmagg.is_available(df.sparkSession)
 
 
 def _key_schema(df: DataFrame, keys: Sequence[str]) -> str:
@@ -357,13 +377,14 @@ def _sketch_by_sql(df, value_col, keys, p, algo, m_bits, hash_mode):
 
 def _encode_raw_udf(algo: str, m_bits: int):
     """Scalar pandas UDF: raw dense register bytes (JVM aggregate output)
-    -> the engine's serialized sketch format.  Runs over one row per group."""
+    -> the engine's serialized sketch format; NULL stays NULL.  Runs over one
+    row per group."""
 
     @F.pandas_udf(BinaryType())
     def _enc(s: pd.Series) -> pd.Series:
         return pd.Series(
             [
-                _sketch.encode(
+                None if b is None else _sketch.encode(
                     np.frombuffer(bytes(b), dtype=np.uint8), algo, m_bits
                 )
                 for b in s
@@ -558,11 +579,23 @@ def merge_sketches(
     m_bits: int = 3,
 ) -> DataFrame:
     """Re-aggregate existing sketch rows to coarser grouping keys (sketch
-    GROUP BY re-aggregation, e.g. per-day sketches -> per-month)."""
+    GROUP BY re-aggregation, e.g. per-day sketches -> per-month), output in
+    format ``algo``.  NULL sketches are skipped; a group with none merges to
+    NULL.
+
+    With the jar: one JVM aggregate decodes and max-merges the input
+    sketches (any format, p from the header), then one Python encode per
+    output group.  Without it: a pandas GROUPED_AGG decodes, merges and
+    encodes with the numpy codec.  Same bytes either way."""
     keys = list(keys or [])
+    if _jvm_available(df):
+        from . import jvmagg
+
+        regs = jvmagg.sketch_merge_agg_column(df.sparkSession, sketch_col)
+        merged = df.groupBy(*keys).agg(regs.alias(sketch_col))
+        enc = _encode_raw_udf(algo, m_bits)
+        return merged.select(*keys, enc(F.col(sketch_col)).alias(sketch_col))
     merge = merge_udaf(algo, m_bits)
-    if not keys:
-        return df.agg(merge(F.col(sketch_col)).alias(sketch_col))
     return df.groupBy(*keys).agg(merge(F.col(sketch_col)).alias(sketch_col))
 
 
@@ -627,32 +660,38 @@ def estimate_grouping_sets(
 
     Each set must be a subset of the fine-grain keys present in ``df``.
     Output: union of all grains; keys absent from a grain are NULL;
-    ``grouping_set_id`` is the index into ``sets``.
+    ``grouping_set_id`` is the index into ``sets``.  NULL sketches are
+    skipped; a group with none estimates 0.0.
 
-    Physical plan (round 3 — replaces the one-job-per-grain union that cost
-    3x the Python aggregate overhead): Catalyst's own ROLLUP strategy,
-    Expand + single aggregate.  Each fine row is projected once per grain
-    with the grain's absent keys masked to NULL, then ONE grouped merge over
-    (grouping_set_id, keys...) and ONE estimate pass run for every grain
-    together — one shuffle, one GROUPED_AGG python stage, one job, however
-    many grains are asked for.  Row amplification is len(sets) x the FINE
-    table (one row per fine key combo — tiny by design), never the base data.
+    Physical plan with the jar: Catalyst's native GROUPING SETS (Expand +
+    one partial/final ObjectHashAggregate of SketchMergeEstimateAggregator,
+    which decodes each fine sketch once, max-merges and estimates in the
+    JVM) — one shuffle, one job, no Python stage, however many grains are
+    asked for; grouping_id() maps back to ``grouping_set_id`` exactly as in
+    ``approx_distinct_grouping_sets``.  ``algo``/``m_bits`` are unused
+    there (no intermediate sketch is encoded).
 
-    The fine sketch table is persisted (lazy; skipped when the caller
-    already persisted it) so the per-grain projections share one
-    InMemoryRelation instead of each re-deriving it from the base scan.
-    Cache lifetime: the CALLER owns it — unpersist after materializing, or
+    Fallback without the jar: the fine table is projected once per grain
+    (absent keys masked to NULL) and unioned, then ONE pandas GROUPED_AGG
+    merge over (grouping_set_id, keys...) and one estimate pass.  That path
+    persists the fine table (lazy; skipped when the caller already
+    persisted it) so the per-grain projections share one InMemoryRelation;
+    its cache lifetime is the CALLER's — unpersist after materializing, or
     call ``spark.catalog.clearCache()`` between batches.
     """
+    sets = [list(s) for s in sets]
+    all_keys = _keys_union(sets)
+    if _jvm_available(df):
+        from . import jvmagg
+
+        est = jvmagg.sketch_merge_est_agg_column(df.sparkSession, sketch_col)
+        return _grouping_sets_agg(
+            df, sets, all_keys, est.alias(estimate_col), estimate_col
+        )
     from pyspark import StorageLevel
 
     if df.storageLevel == StorageLevel.NONE:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    all_keys: list[str] = []
-    for s in sets:
-        for k in s:
-            if k not in all_keys:
-                all_keys.append(k)
     dtypes = dict(df.dtypes)
     merge = merge_udaf(algo, m_bits)
     parts = []
@@ -674,10 +713,45 @@ def estimate_grouping_sets(
     merged = expanded.groupBy("grouping_set_id", *all_keys).agg(
         merge(F.col(sketch_col)).alias(sketch_col)
     )
-    return merged.select(
-        "grouping_set_id",
-        *all_keys,
-        estimate_udf(F.col(sketch_col)).alias(estimate_col),
+    est = F.coalesce(estimate_udf(F.col(sketch_col)), F.lit(0.0))
+    return merged.select("grouping_set_id", *all_keys, est.alias(estimate_col))
+
+
+def _keys_union(sets: Sequence[Sequence[str]]) -> list[str]:
+    keys: list[str] = []
+    for s in sets:
+        for k in s:
+            if k not in keys:
+                keys.append(k)
+    return keys
+
+
+def _grouping_sets_agg(df, sets, keys_union, agg_col, out_col) -> DataFrame:
+    """Native GROUPING SETS (Expand + one aggregate) of ``agg_col`` over
+    ``sets``, with grouping_id() (NULL-mask bitmap over ``keys_union``)
+    mapped back to the positional ``grouping_set_id`` so genuine NULL key
+    values cannot be confused with grain masking.  Each distinct set is
+    aggregated once; a duplicated set gets one output row per position."""
+    n = len(keys_union)
+    gids: dict[int, list[int]] = {}  # mask -> positions in sets
+    unique: list[list[str]] = []
+    for g, s in enumerate(sets):
+        mask = sum(1 << (n - 1 - i) for i, k in enumerate(keys_union) if k not in s)
+        if mask not in gids:
+            gids[mask] = []
+            unique.append(s)
+        gids[mask].append(g)
+    grouped = df.groupingSets(
+        [[F.col(k) for k in s] for s in unique], *[F.col(k) for k in keys_union]
+    )
+    out = grouped.agg(F.grouping_id().alias("__gmask"), agg_col)
+    gid = F.lit(None).cast("array<int>")
+    for mask, gs in gids.items():
+        gid = F.when(
+            F.col("__gmask") == mask, F.array(*[F.lit(g) for g in gs])
+        ).otherwise(gid)
+    return out.select(
+        F.explode(gid).alias("grouping_set_id"), *keys_union, F.col(out_col)
     )
 
 
@@ -720,25 +794,11 @@ def approx_distinct_grouping_sets(
     back to the positional ``grouping_set_id`` so the output schema matches
     ``estimate_grouping_sets``, and genuine NULL key values cannot be
     confused with grain masking.  Other impls fall back to sketch_by +
-    estimate_grouping_sets (one pandas merge stage, any algo); duplicate
-    grouping sets also take that path (native GROUPING SETS computes a
-    duplicated grain once)."""
+    estimate_grouping_sets."""
     sets = [list(s) for s in sets]
-    keys_union: list[str] = []
-    for s in sets:
-        for k in s:
-            if k not in keys_union:
-                keys_union.append(k)
+    keys_union = _keys_union(sets)
     impl = _resolve_impl(df, hash_mode, impl)
-    masks = []
-    n = len(keys_union)
-    for s in sets:
-        mask = 0
-        for i, k in enumerate(keys_union):
-            if k not in s:
-                mask |= 1 << (n - 1 - i)
-        masks.append(mask)
-    if impl != "jvm" or len(set(masks)) != len(masks):
+    if impl != "jvm":
         sk = sketch_by(
             df, value_col, keys_union, p=p, hash_mode=hash_mode, impl=impl
         )
@@ -756,17 +816,7 @@ def approx_distinct_grouping_sets(
     est = jvmagg.est_agg_column(df.sparkSession, p, _HASH_COL).alias(
         estimate_col
     )
-    grouped = projected.groupingSets(
-        [[F.col(k) for k in s] for s in sets],
-        *[F.col(k) for k in keys_union],
-    )
-    out = grouped.agg(F.grouping_id().alias("__gmask"), est)
-    gid = F.lit(None).cast("int")
-    for g, mask in enumerate(masks):
-        gid = F.when(F.col("__gmask") == mask, g).otherwise(gid)
-    return out.select(
-        gid.alias("grouping_set_id"), *keys_union, F.col(estimate_col)
-    )
+    return _grouping_sets_agg(projected, sets, keys_union, est, estimate_col)
 
 
 def approx_distinct_rollup(
@@ -891,9 +941,7 @@ def approx_distinct(
     sk = sketch_by(
         df, value_col, keys, p=p, algo=algo, hash_mode=hash_mode, impl=impl, **kw
     )
-    return sk.select(
-        *keys, estimate_udf(F.col(_SKETCH_COL)).alias(estimate_col)
-    )
+    return with_estimate(sk, estimate_col=estimate_col).select(*keys, estimate_col)
 
 
 def approx_distinct_multi(
@@ -984,7 +1032,16 @@ def approx_distinct_multi(
 
 def with_estimate(df: DataFrame, sketch_col: str = _SKETCH_COL,
                   estimate_col: str = "distinct_estimate") -> DataFrame:
-    return df.withColumn(estimate_col, estimate_udf(F.col(sketch_col)))
+    """Adds the distinct-count estimate of ``sketch_col`` (NULL for a NULL
+    sketch): a JVM scalar UDF when the jar is available, else the numpy
+    ``estimate_udf``."""
+    if _jvm_available(df):
+        from . import jvmagg
+
+        est = jvmagg.sketch_estimate_column(df.sparkSession, sketch_col)
+    else:
+        est = estimate_udf(F.col(sketch_col))
+    return df.withColumn(estimate_col, est)
 
 
 def rolling_distinct(

@@ -1,4 +1,5 @@
-"""Optional JVM fast path for the HLL register build.
+"""Optional JVM fast path: the HLL register build, and the merge and
+estimate of serialized sketches.
 
 The declarative SQL build (hllspark.agg impl='sql') pays a per-row
 HashAggregate probe on (keys, j); Spark's own approx_count_distinct avoids
@@ -11,6 +12,22 @@ JVM build runs at ~0.95-1.1x Spark's built-in HLL++ (vs 3.2x slower for the
 SQL formulation) and produces byte-identical registers to impl='sql' /
 impl='pandas' (same jr_split convention; pytest-gated).
 
+Flavors (SQL function names registered per session; see ``_FLAVORS``):
+
+    regs              bigint hash -> raw byte[2^p] registers (HllRegAggregator)
+    est               bigint hash -> estimate (HllEstimateAggregator)
+    merge_est         raw registers -> merged estimate (HllMergeEstimateAggregator)
+    sketch_merge      serialized sketch -> merged raw registers, NULL for a
+                      group with no non-NULL sketch (SketchMergeAggregator)
+    sketch_merge_est  serialized sketch -> merged estimate, 0.0 for a group
+                      with no non-NULL sketch (SketchMergeEstimateAggregator)
+    sketch_est        scalar UDF: serialized sketch -> estimate, NULL for
+                      NULL (SketchEstimateUdf)
+
+The three sketch_* flavors decode every format hllspark.sketch writes
+(java/src/hllspark/SketchCodec.java, parity-tested against sketch.decode)
+and read p from each sketch's header; mixed p within one group fails loudly.
+
 Availability: the pre-built jar ships at hllspark/jars/hllspark-jvm.jar
 (source + build script under java/); it must be on the DRIVER classpath at
 JVM launch — e.g.::
@@ -21,7 +38,8 @@ JVM launch — e.g.::
 
 Sessions without the jar (e.g. an externally-created SparkSession) simply
 report ``is_available() == False`` and hllspark.agg falls back to the pure
-SQL plan — results are identical either way, only speed differs.
+SQL build and the numpy codec in pandas UDFs — results are identical either
+way, only speed differs.
 """
 
 from __future__ import annotations
@@ -30,6 +48,7 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, SparkSession
+from pyspark.sql.types import DoubleType
 
 _AGG_CLASS = "hllspark.HllRegAggregator"
 # availability is a CLASSPATH property — JVM-wide, so per-application
@@ -74,38 +93,46 @@ def is_available(spark: SparkSession) -> bool:
     if key not in _availability:
         try:
             spark._jvm.hllspark.HllRegAggregator(4)  # ctor validates p
+            spark._jvm.hllspark.SketchEstimateUdf()  # absent from a stale jar
             _availability[key] = _executors_have_jar(spark)
         except Exception:
             _availability[key] = False
     return _availability[key]
 
 
-def _register(spark: SparkSession, p: int, flavor: str) -> str:
-    """Register (idempotently) one of the UDAFs for precision ``p`` and
-    return its SQL function name.  flavor: 'regs' (bigint hash in, raw
-    register bytes out — for sketch_by / checkpointing), 'est' (bigint hash
-    in, double estimate out — the single-stage pure-JVM approx_distinct
-    plan), or 'merge_est' (raw register bytes IN, register-wise max merge,
-    double estimate out — the re-aggregation half of the monoid, used by the
-    zero-Python rollup/grouping-sets plan)."""
-    name = f"hllspark_{flavor}_p{p}"
+# flavor -> (class, constructor takes p, input encoder); see module docstring
+_FLAVORS = {
+    "regs": ("HllRegAggregator", True, "LONG"),
+    "est": ("HllEstimateAggregator", True, "LONG"),
+    "merge_est": ("HllMergeEstimateAggregator", True, "BINARY"),
+    "sketch_merge": ("SketchMergeAggregator", False, "BINARY"),
+    "sketch_merge_est": ("SketchMergeEstimateAggregator", False, "BINARY"),
+}
+
+
+def _register(spark: SparkSession, p: int | None, flavor: str) -> str:
+    """Register (idempotently) one of the UDAFs in ``_FLAVORS`` and return
+    its SQL function name.  ``p`` is None for the sketch_* flavors, which
+    read it from each sketch's header."""
+    name = f"hllspark_{flavor}" + (f"_p{p}" if p is not None else "")
+    _require(spark)
+    jvm = spark._jvm
+    cls, takes_p, in_enc = _FLAVORS[flavor]
+    ctor = getattr(jvm.hllspark, cls)
+    agg_obj = ctor(p) if takes_p else ctor()
+    enc = getattr(jvm.org.apache.spark.sql.Encoders, in_enc)()
+    udaf = jvm.org.apache.spark.sql.functions.udaf(agg_obj, enc)
+    spark._jsparkSession.udf().register(name, udaf)
+    return name
+
+
+def _require(spark: SparkSession) -> None:
     if not is_available(spark):
         raise RuntimeError(
             "hllspark JVM fast path unavailable: put "
             f"{jar_path()} on spark.driver.extraClassPath (see "
             "hllspark.jvmagg docstring)"
         )
-    jvm = spark._jvm
-    enc = jvm.org.apache.spark.sql.Encoders
-    if flavor == "regs":
-        agg_obj, in_enc = jvm.hllspark.HllRegAggregator(p), enc.LONG()
-    elif flavor == "est":
-        agg_obj, in_enc = jvm.hllspark.HllEstimateAggregator(p), enc.LONG()
-    else:  # merge_est
-        agg_obj, in_enc = jvm.hllspark.HllMergeEstimateAggregator(p), enc.BINARY()
-    udaf = jvm.org.apache.spark.sql.functions.udaf(agg_obj, in_enc)
-    spark._jsparkSession.udf().register(name, udaf)
-    return name
 
 
 def register(spark: SparkSession, p: int) -> str:
@@ -130,3 +157,26 @@ def merge_est_agg_column(spark: SparkSession, p: int, regs_col: str) -> Column:
     The re-aggregation plan: fine registers -> coarser grains with no
     Python stage (reference merge HyperLogLog.hpp:124-131)."""
     return F.expr(f"{_register(spark, p, 'merge_est')}(`{regs_col}`)")
+
+
+def sketch_merge_agg_column(spark: SparkSession, sketch_col: str) -> Column:
+    """Aggregate expression decoding serialized sketches and merging them
+    (register-wise max) into raw dense registers; NULL for a group with no
+    non-NULL sketch."""
+    return F.expr(f"{_register(spark, None, 'sketch_merge')}(`{sketch_col}`)")
+
+
+def sketch_merge_est_agg_column(spark: SparkSession, sketch_col: str) -> Column:
+    """Aggregate expression decoding and merging serialized sketches and
+    producing the distinct-count estimate (0.0 for a group with no non-NULL
+    sketch) — a rollup over stored sketches with no Python stage."""
+    return F.expr(f"{_register(spark, None, 'sketch_merge_est')}(`{sketch_col}`)")
+
+
+def sketch_estimate_column(spark: SparkSession, sketch_col: str) -> Column:
+    """Scalar expression: serialized sketch -> distinct-count estimate
+    (NULL for a NULL sketch)."""
+    _require(spark)
+    name = "hllspark_sketch_est"
+    spark.udf.registerJavaFunction(name, "hllspark.SketchEstimateUdf", DoubleType())
+    return F.expr(f"{name}(`{sketch_col}`)")

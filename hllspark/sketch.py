@@ -40,6 +40,11 @@ Payloads:
 All encoders are deterministic functions of the register state, so sketches
 built on different executors / task retries serialize identically — a
 requirement for the byte-identity partition-invariance tests.
+
+The JVM decoder java/src/hllspark/SketchCodec.java reads this format too
+(hllspark.agg merges and estimates stored sketches with it), so a format or
+version change must update both decoders and the parity test in
+tests/test_sketch_jvm.py, then rebuild the jar with java/build.sh.
 """
 
 from __future__ import annotations
